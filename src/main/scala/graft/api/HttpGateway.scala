@@ -2654,15 +2654,12 @@ final class HttpGateway(
     * collection — the CONTINUOUS half of the contract: collect-time
     * maintenance, so a view read is always current without a refresh
     * call (the upstream continuous-query semantics). Synchronous under
-    * the store's write lock: single-writer, no replay, so the direct
-    * initialize/refresh pair is exactly-once by construction. */
+    * the store's write lock: single-writer, no replay, so the
+    * lifecycle's unfenced initialize-or-refresh step is exactly-once by
+    * construction. */
   private def maintainMvs(coll: String, df: DataFrame): Unit =
     storedMvDefs().filter(_.collection == coll).foreach { d =>
-      val path = mvStateDir(d.name)
-      val aligned = alignForMv(d, df)
-      if (!graft.store.VersionedState.exists(path))
-        d.view.initialize(aligned, path)
-      else d.view.refresh(spark, aligned, path)
+      d.view.fold(alignForMv(d, df), mvStateDir(d.name), -1L)
     }
 
   /** Everything stored for `collection` — or, for a collection declared

@@ -27,18 +27,19 @@ import org.apache.spark.sql.functions._
   *    exact-score only the probed cells' postings — the sim4 plan
   *    served from disk instead of recomputed.
   *
-  * Versions are numbered contiguously from 1; `_CURRENT` points at the
-  * highest valid one and flips atomically ([[VersionedState]] layout).
-  * `append` carries an expected-version fence: a replayed micro-batch
-  * (at-least-once delivery) targets an already-written version and is
-  * skipped — exactly-once postings without a transaction log.
+  * Versions are numbered contiguously from 1 through the shared
+  * [[PostingStore]] lifecycle: `append` carries an expected-version
+  * fence, stream maintenance the batch-id replay fence — exactly-once
+  * postings without a transaction log.
   *
   * Ref: the reference has no vector surface; this is the SURVEY §2
   * "beyond the reference" similarity mandate made operable at scale.
   */
-object AnnIndex {
+object AnnIndex extends PostingStore {
 
   import SimilarityQueries.{IvfCells, IvfProbes}
+
+  protected val partitionCol = "cell"
 
   private def withNorm(emb: DataFrame): DataFrame =
     emb.withColumn("norm",
@@ -89,110 +90,28 @@ object AnnIndex {
   /** Bootstrap: freeze centroids from the first batch, write postings
     * v=1. The seed vectors (vec_id < [[IvfCells]]) must be present in
     * the bootstrap batch. */
-  def initialize(emb: DataFrame, path: String): Unit = {
+  def initialize(emb: DataFrame, path: String): Unit =
+    bootstrap(emb, path, -1L)
+
+  protected def bootstrap(emb: DataFrame, path: String,
+      batchId: Long): Unit = {
     val cents = centroidsOf(emb)
     require(cents.count() == IvfCells,
       s"bootstrap batch must contain the $IvfCells seed vectors")
     cents.write.mode("errorifexists").parquet(centroidsDirOf(path, 1))
-    writePostings(assign(emb, cents), path, 1)
+    writePostings(assign(emb, cents), path, 1, batchId)(())
   }
 
-  /** Append a delta as version `expected`. Returns false (no-op) if
-    * that version already exists — the at-least-once replay fence.
-    * `batchId` records the streaming high-water mark in the pointer
-    * (-1 for batch-API appends). */
+  /** Append a delta as version `expected` against the active centroids.
+    * Returns false (no-op) if that version already exists — the
+    * at-least-once replay fence. `batchId` records the streaming
+    * high-water mark in the pointer (-1 for batch-API appends). */
   def append(spark: SparkSession, delta: DataFrame, path: String,
-      expected: Long, batchId: Long = -1L): Boolean = {
-    val cur = VersionedState.currentVersion(path)
-    if (expected <= cur) return false
-    require(expected == cur + 1, s"append $expected against current $cur")
-    val cents = spark.read.parquet(centroidsDir(path))
-    writePostings(assign(delta, cents), path, expected, batchId)
-    true
-  }
-
-  private def writePostings(p: DataFrame, path: String, v: Long,
-      batchId: Long = -1L): Unit = {
-    // co-locate each cell before the write (r17, guide §6 small files):
-    // without this, every input partition opened a file in every cell
-    // dir it touched — up to (partitions × cells) near-empty files per
-    // version; one exchange makes it one file set per cell, the same
-    // discipline compactPostings and InvertedIndex.writeVersion already
-    // apply, and the layout serving probes prune against
-    p.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(VersionedState.versionDir(path, v))
-    // the version dir is complete before the pointer flip
-    VersionedState.writePointer(path, v, batchId)
-  }
-
-  /** First version directory still carrying live postings: versions
-    * below the `_BASE` marker were folded into it by [[compactPostings]]
-    * / [[reseed]] and are superseded. The marker carries
-    * `base:previousBase` — a base beyond `_CURRENT` is an in-flight
-    * rewrite that never flipped the pointer, so readers fall back to
-    * the PREVIOUS base (whose dirs still exist; falling back to 1
-    * would point at dirs an earlier compaction already deleted). */
-  private def baseVersion(path: String): Long = {
-    val cur = VersionedState.currentVersion(path)
-    VersionedState.readMarker(path, "_BASE").map { s =>
-      val parts = s.split(':')
-      val b = parts(0).toLong
-      if (b <= cur) b
-      else if (parts.length > 1) parts(1).toLong
-      else 1L
-    }.getOrElse(1L)
-  }
-
-  /** All postings up to `_CURRENT` (a union of immutable version dirs
-    * from the compaction base — append never rewrote anything). */
-  def postings(spark: SparkSession, path: String): DataFrame = {
-    val cur = VersionedState.currentVersion(path)
-    val dirs = (baseVersion(path) to cur).map(VersionedState.versionDir(path, _))
-    // basePath makes the v=N dirs one partitioned layout (v, cell both
-    // become partition columns; the probe's cell filter still prunes)
-    spark.read.option("basePath", path).parquet(dirs: _*)
-      .drop("v")
-  }
-
-  /** Consolidate all live postings into ONE version directory — the
-    * maintenance job an append-only index needs at scale: every
-    * streamed append lands a file set per touched cell, so a long-lived
-    * index accumulates thousands of tiny files and probe-time footer
-    * reads come to dominate scan cost. Rewrites the union as version
-    * `cur+1` with one file per cell, marks it the new `_BASE`, flips
-    * the pointer (preserving the streaming batch fence), and deletes
-    * the superseded dirs. Crash-safe at every step: the base marker
-    * only takes effect once `_CURRENT` reaches it, and a reader that
-    * resolved the old pointer still finds its dirs until the final
-    * delete (single-maintainer discipline, as with
-    * [[VersionedState.compact]]). Appends then continue from `cur+2`. */
-  def compactPostings(spark: SparkSession, path: String,
-      deferDeletion: Boolean = false): Unit = {
-    val cur = VersionedState.currentVersion(path)
-    val oldBase = baseVersion(path)
-    if (oldBase == cur) return // already one live dir
-    val v = cur + 1
-    postings(spark, path)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(VersionedState.versionDir(path, v))
-    VersionedState.writeMarker(path, "_BASE", s"$v:$oldBase")
-    VersionedState.writePointer(path, v, VersionedState.lastBatchId(path))
-    // deferDeletion keeps the ENTIRE just-superseded set until the
-    // NEXT compaction: a concurrent query resolves the full live dir
-    // set [base..cur] and compaction supersedes exactly that set, so
-    // keeping any smaller suffix protects nothing. The next cycle
-    // removes everything below the old base (the previous leftovers).
-    val cutoff = if (deferDeletion) oldBase else v
-    val hadoopDir = new org.apache.hadoop.fs.Path(path)
-    val fs = hadoopDir.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(hadoopDir).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .map(_.getPath.getName.drop(2).toLong)
-      .filter(_ < cutoff)
-      .foreach(VersionedState.deleteVersion(path, _))
-  }
+      expected: Long, batchId: Long = -1L): Boolean =
+    appendAt(path, expected) { _ =>
+      val cents = spark.read.parquet(centroidsDir(path))
+      writePostings(assign(delta, cents), path, expected, batchId)(())
+    }
 
   /** Re-seed the coarse quantizer from the CURRENT corpus — the action
     * [[ai2IndexHealth]]'s drift signals trigger. Frozen centroids rot
@@ -215,7 +134,7 @@ object AnnIndex {
   def reseed(spark: SparkSession, path: String, iters: Int = 2): Unit = {
     import spark.implicits._
     val cur = VersionedState.currentVersion(path)
-    val oldBase = baseVersion(path)
+    val oldBase = baseVersion(path, cur)
     val gen = activeGen(path)
     val posts = postings(spark, path)
       .select($"vec_id", $"embedding", $"label")
@@ -245,10 +164,8 @@ object AnnIndex {
     assign(posts, reread)
       .write.mode("overwrite").partitionBy("cell")
       .parquet(VersionedState.versionDir(path, v))
-    VersionedState.writeMarker(path, "_BASE", s"$v:$oldBase")
     VersionedState.writeMarker(path, "_GEN", s"$newGen:$v")
-    VersionedState.writePointer(path, v, VersionedState.lastBatchId(path))
-    (oldBase until v).foreach(VersionedState.deleteVersion(path, _))
+    rebase(path, v, oldBase, v)
   }
 
   /** Top-k by exact cosine within the query's [[IvfProbes]] closest
@@ -276,36 +193,6 @@ object AnnIndex {
       .limit(k)
       .select(col("vec_id"), col("label"), col("cell"), col("cos"))
   }
-
-  /** One micro-batch of [[maintain]], fenced on the PERSISTED
-    * high-water batch id (recorded with every pointer flip): a replayed
-    * batch (at-least-once delivery after crash recovery) is at or below
-    * the high-water mark and skipped — exactly-once postings. The
-    * version number is always `currentVersion + 1`, never derived from
-    * the batch id, so EMPTY micro-batches (routine: any trigger with no
-    * new data, and batches dropped on recovery) leave no version gap —
-    * they only advance the recorded batch id via a pointer-only flip.
-    * The index must be [[initialize]]d (bootstrap = v1) before the
-    * stream starts. */
-  def maintainBatch(delta: DataFrame, path: String, batchId: Long): Unit = {
-    if (batchId > VersionedState.lastBatchId(path)) {
-      if (delta.isEmpty) {
-        VersionedState.writePointer(path,
-          VersionedState.currentVersion(path), batchId)
-      } else {
-        append(delta.sparkSession, delta, path,
-          VersionedState.currentVersion(path) + 1, batchId)
-      }
-    }
-  }
-
-  /** Maintain the index from an embedding stream — each micro-batch is
-    * one [[maintainBatch]] append against the frozen centroids. */
-  def maintain(stream: DataFrame, path: String):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (delta: DataFrame, batchId: Long) => maintainBatch(delta, path, batchId)
-    }
 
   // ---------------- the oracle contract ----------------
 

@@ -22,23 +22,23 @@ import graft.analytics.{DedupQueries, RetrievalQueries}
   * marker folded cumulatively at each append; a probe never scans
   * postings it didn't match.
   *
-  * Append-only lifecycle, exactly [[AnnIndex]]'s: each batch writes an
-  * immutable `v=N` postings dir plus its cumulative stats marker, then
-  * flips `_CURRENT` ([[VersionedState]]); readers union the live dirs.
-  * New documents carry new doc_ids, so postings never need merging —
-  * union IS the merge (the same append-only property the event store
-  * leans on). [[compactPostings]] consolidates accumulated small files
-  * into one dir per shard; [[maintain]] folds a document stream in with
-  * the shared at-least-once replay fence.
+  * Append-only lifecycle, the shared [[PostingStore]] one (as
+  * [[AnnIndex]]'s): each batch writes an immutable `v=N` postings dir
+  * plus its cumulative stats marker (the pre-flip sidecar), then flips
+  * `_CURRENT`; readers union the live dirs. New documents carry new
+  * doc_ids, so postings never need merging — union IS the merge (the
+  * same append-only property the event store leans on).
   *
   * The oracle contract (ix1): a two-batch build probed with the canned
   * query must hash-match the batchless [[RetrievalQueries.r1Bm25TopK]]
   * — the di1/ai1 pattern: batch boundaries cannot change a score.
   */
-object InvertedIndex {
+object InvertedIndex extends PostingStore {
 
   /** Term-hash shards per version dir — the probe's pruning grain. */
   val NumShards = 64
+
+  protected val partitionCol = "shard"
 
   /** Shard assignment uses the PORTABLE content hash ([[DedupQueries
     * .hash60]], identical in Spark and DuckDB) — the repo's discipline
@@ -112,18 +112,12 @@ object InvertedIndex {
     (n.toLong, s.toLong)
   }
 
-  private def writeVersion(p: DataFrame, path: String, v: Long,
-      nDocs: Long, sumDl: Long, batchId: Long): Unit = {
-    // co-locate each shard before the write: one file set per shard dir
-    // instead of (input partitions × shards) small files
-    p.repartition(col("shard"))
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(VersionedState.versionDir(path, v))
-    // stats marker lands before the pointer flip: a reader that
-    // resolves the new version always finds its stats; an orphan
-    // marker from a crash before the flip is harmless
-    writeStats(path, v, nDocs, sumDl)
-    VersionedState.writePointer(path, v, batchId)
+  /** Stats are cumulative per version, so compaction re-records the
+    * current marker for the consolidated version. */
+  override protected def carrySidecar(path: String, from: Long,
+      to: Long): Unit = {
+    val (n, s) = readStats(path, from)
+    writeStats(path, to, n, s)
   }
 
   /** Bootstrap the index from the initial corpus. */
@@ -137,8 +131,13 @@ object InvertedIndex {
   private def initializeWithStats(docs: DataFrame, path: String,
       stats: (Long, Long), batchId: Long = -1L): Unit = {
     VersionedState.writeMarker(path, "_FORMAT", FormatVersion)
-    writeVersion(postingsOf(docs), path, 1, stats._1, stats._2, batchId)
+    writePostings(postingsOf(docs), path, 1, batchId)(
+      writeStats(path, 1, stats._1, stats._2))
   }
+
+  protected def bootstrap(delta: DataFrame, path: String,
+      batchId: Long): Unit =
+    initialize(delta, path, batchId)
 
   /** Append a delta batch as version `expected` (cumulative stats fold
     * in from the previous version's marker). Returns false if that
@@ -157,76 +156,14 @@ object InvertedIndex {
     * [[initializeWithStats]]). */
   private def appendWithStats(spark: SparkSession, delta: DataFrame,
       path: String, expected: Long, stats: Option[(Long, Long)],
-      batchId: Long = -1L): Boolean = {
-    val cur = VersionedState.currentVersion(path)
-    if (expected <= cur) return false
-    require(expected == cur + 1, s"append $expected against current $cur")
-    requirePositional(path)
-    val (pn, ps) = readStats(path, cur)
-    val (dn, dsz) = stats.getOrElse(statsOf(delta))
-    writeVersion(postingsOf(delta), path, expected, pn + dn, ps + dsz, batchId)
-    true
-  }
-
-  /** First version directory still carrying live postings (versions
-    * below the `_BASE` marker were consolidated — see [[AnnIndex]]'s
-    * identical discipline for the crash-safety argument). */
-  private def baseVersion(path: String): Long = {
-    val cur = VersionedState.currentVersion(path)
-    VersionedState.readMarker(path, "_BASE").map { s =>
-      val parts = s.split(':')
-      val b = parts(0).toLong
-      if (b <= cur) b
-      else if (parts.length > 1) parts(1).toLong
-      else 1L
-    }.getOrElse(1L)
-  }
-
-  /** All live postings (union of immutable version dirs; `shard` stays
-    * a partition column, so term filters prune at the file level). */
-  def postings(spark: SparkSession, path: String): DataFrame = {
-    val cur = VersionedState.currentVersion(path)
-    val dirs = (baseVersion(path) to cur).map(VersionedState.versionDir(path, _))
-    spark.read.option("basePath", path).parquet(dirs: _*).drop("v")
-  }
-
-  /** Consolidate live postings into one dir (one file set per shard) —
-    * the small-files maintenance job, crash-safe exactly as
-    * [[AnnIndex.compactPostings]]. Stats are cumulative per version,
-    * so the current marker is re-recorded for the new version.
-    *
-    * `deferDeletion=true` makes compaction safe under concurrent
-    * readers: a reader resolves the FULL live dir set [base..cur], and
-    * compaction supersedes exactly that set — so the only window that
-    * protects an in-flight reader is keeping the ENTIRE just-superseded
-    * set until the NEXT compaction (which then removes the previous
-    * cycle's leftovers, i.e. every dir below the old base). The default
-    * (false) deletes immediately — the single-maintainer, no-concurrent-
-    * reader maintenance-window semantics. */
-  def compactPostings(spark: SparkSession, path: String,
-      deferDeletion: Boolean = false): Unit = {
-    val cur = VersionedState.currentVersion(path)
-    val oldBase = baseVersion(path)
-    if (oldBase == cur) return
-    val v = cur + 1
-    val (n, s) = readStats(path, cur)
-    postings(spark, path)
-      .repartition(col("shard"))
-      .write.mode("overwrite").partitionBy("shard")
-      .parquet(VersionedState.versionDir(path, v))
-    writeStats(path, v, n, s)
-    VersionedState.writeMarker(path, "_BASE", s"$v:$oldBase")
-    VersionedState.writePointer(path, v, VersionedState.lastBatchId(path))
-    val cutoff = if (deferDeletion) oldBase else v
-    val hadoopDir = new org.apache.hadoop.fs.Path(path)
-    val fs = hadoopDir.getFileSystem(
-      spark.sessionState.newHadoopConf())
-    fs.listStatus(hadoopDir).toIndexedSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .map(_.getPath.getName.drop(2).toLong)
-      .filter(_ < cutoff)
-      .foreach(VersionedState.deleteVersion(path, _))
-  }
+      batchId: Long = -1L): Boolean =
+    appendAt(path, expected) { cur =>
+      requirePositional(path)
+      val (pn, ps) = readStats(path, cur)
+      val (dn, dsz) = stats.getOrElse(statsOf(delta))
+      writePostings(postingsOf(delta), path, expected, batchId)(
+        writeStats(path, expected, pn + dn, ps + dsz))
+    }
 
   /** Shard ids of the probed terms, computed with the SAME expression
     * that sharded the postings (a |terms|-row local frame — never a
@@ -301,29 +238,6 @@ object InvertedIndex {
       .select($"doc_id", counter.cast("long").as("n_occurrences"))
       .filter($"n_occurrences" > 0)
   }
-
-  /** One micro-batch of [[maintain]] — the shared replay fence. */
-  def maintainBatch(delta: DataFrame, path: String, batchId: Long): Unit = {
-    if (!VersionedState.exists(path)) {
-      if (!delta.isEmpty) initialize(delta, path, batchId)
-    } else if (batchId > VersionedState.lastBatchId(path)) {
-      if (delta.isEmpty) {
-        VersionedState.writePointer(path,
-          VersionedState.currentVersion(path), batchId)
-      } else {
-        append(delta.sparkSession, delta, path,
-          VersionedState.currentVersion(path) + 1, batchId)
-      }
-    }
-  }
-
-  /** Maintain the index from a document stream — each micro-batch
-    * appends one postings version. */
-  def maintain(stream: DataFrame, path: String):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (delta: DataFrame, batchId: Long) => maintainBatch(delta, path, batchId)
-    }
 
   // ---------------- the oracle contract ----------------
 

@@ -27,11 +27,13 @@ import org.apache.spark.sql.types.DecimalType
   * how much history the view already covers; all five state aggregates
   * are commutative+associative, so merge order (and therefore partition
   * layout and replayed batch boundaries) cannot change the result.
+  * The persisted lifecycle (refresh, replay-fenced stream maintenance,
+  * compaction) is the shared [[MergeStore]] one.
   */
 final class MaterializedView(
     val groupCols: Seq[String], val valueCols: Seq[String],
     val distinctCols: Seq[String] = Nil,
-    val quantileCols: Seq[String] = Nil) {
+    val quantileCols: Seq[String] = Nil) extends MergeStore {
   import MaterializedView._
   import graft.functions.KllQuantiles.{kllSketchAgg, kllMergeAgg, kllQuantile}
 
@@ -87,65 +89,9 @@ final class MaterializedView(
     state.select(groupExprs ++ outs: _*)
   }
 
-  // ---------------- persist-backed refresh ----------------
-
-  /** Write the first state version for `batch` at `path`. */
-  def initialize(batch: DataFrame, path: String, batchId: Long = -1L): Unit =
-    writeVersion(partial(batch), path, 1, batchId)
-
-  /** Fold a delta batch into the persisted state: read current, merge the
-    * delta's partial, write the NEXT version, flip the pointer. Parquet
-    * cannot be read and overwritten in place, so versions are separate
-    * directories and `_CURRENT` flips atomically — a concurrent reader
-    * sees the old or the new state, never a torn one. */
-  def refresh(spark: SparkSession, delta: DataFrame, path: String,
-      batchId: Long = -1L): Unit = {
-    val v = VersionedState.currentVersion(path)
-    val state = spark.read.parquet(VersionedState.versionDir(path, v))
-    writeVersion(merge(state, partial(delta)), path, v + 1, batchId)
-  }
-
   /** Serve the view from the persisted state. */
   def read(spark: SparkSession, path: String): DataFrame =
     result(VersionedState.readCurrent(spark, path))
-
-  /** One micro-batch of [[maintain]], fenced on the high-water batch id
-    * persisted with every pointer flip: a replayed micro-batch
-    * (at-least-once delivery after crash recovery) is at or below the
-    * recorded mark and skipped, so its rows are never re-merged into the
-    * sums/counts — the view is EXACTLY-once, same fence as
-    * [[AnnIndex.maintainBatch]]. Empty micro-batches only advance the
-    * recorded batch id (pointer-only flip, no state version burned). */
-  def maintainBatch(delta: DataFrame, path: String, batchId: Long): Unit = {
-    if (!VersionedState.exists(path)) {
-      if (!delta.isEmpty) initialize(delta, path, batchId)
-    } else if (batchId > VersionedState.lastBatchId(path)) {
-      if (delta.isEmpty) {
-        VersionedState.writePointer(path,
-          VersionedState.currentVersion(path), batchId)
-      } else refresh(delta.sparkSession, delta, path, batchId)
-    }
-  }
-
-  /** Maintain the view CONTINUOUSLY from a stream: each micro-batch is a
-    * delta folded in by [[refresh]] — the reference's continuous query
-    * (rakam's PreCalculateQuery/materialized-view refresh loop) as one
-    * foreachBatch, made exactly-once by [[maintainBatch]]'s replay
-    * fence. */
-  def maintain(stream: DataFrame, path: String):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (delta: DataFrame, batchId: Long) => maintainBatch(delta, path, batchId)
-    }
-
-  /** Remove superseded state versions (the maintenance job's half of
-    * the pointer-flip contract). */
-  def compact(path: String, grace: Int = 1): Unit =
-    VersionedState.compact(path, grace)
-
-  private def writeVersion(state: DataFrame, path: String, v: Long,
-      batchId: Long = -1L): Unit =
-    VersionedState.writeVersion(state, path, v, batchId)
 }
 
 object MaterializedView {

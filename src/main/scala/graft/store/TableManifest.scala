@@ -163,9 +163,10 @@ private[graft] object TableManifest {
       val noteLines = note.toSeq.map(n => s"#note=$n")
       val v = prevV + 1
       if (casCreate(commitFile(table, v),
-          noteLines ++ addLines ++ removeLines)) {
+          (noteLines ++ addLines ++ removeLines).mkString("\n"))) {
         if (v % CheckpointEvery == 0)
-          casCreate(checkpointFile(table, v), filesAt(table, v).toSeq.sorted)
+          casCreate(checkpointFile(table, v),
+            filesAt(table, v).toSeq.sorted.mkString("\n"))
         return v
       }
       attempt += 1
@@ -178,12 +179,13 @@ private[graft] object TableManifest {
 
   /** Atomic create-with-content: write a tmp file, hard-link it to the
     * target (fails if the target exists — the CAS), delete the tmp. No
-    * reader can observe a half-written file. */
-  private def casCreate(target: File, lines: Seq[String]): Boolean = {
+    * reader can observe a half-written file. Also the claim primitive
+    * of [[MaintenanceFence]]. */
+  private[store] def casCreate(target: File, content: String): Boolean = {
     val tmp = File.createTempFile(".cas-", ".tmp", target.getParentFile)
     try {
-      Files.write(tmp.toPath, lines.mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Files.write(tmp.toPath,
+        content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       try { Files.createLink(target.toPath, tmp.toPath); true }
       catch { case _: java.nio.file.FileAlreadyExistsException => false }
     } finally { tmp.delete(): Unit }

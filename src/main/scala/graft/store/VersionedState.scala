@@ -1,5 +1,6 @@
 package graft.store
 
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
@@ -7,30 +8,29 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned parquet state with an atomically-flipped `_CURRENT`
-  * pointer — the persistence layout shared by the incremental stores
-  * ([[MaterializedView]], [[DedupIndex]], [[AnnIndex]]). Parquet cannot
-  * be read and overwritten in place, so each refresh writes the NEXT
-  * `v=N` directory and renames `_CURRENT.tmp` over `_CURRENT`: a
-  * concurrent reader resolves the old or the new version, never a torn
-  * one.
+  * pointer — the persistence layout of all six incremental stores,
+  * written through the one lifecycle in [[IncrementalStore]] (the only
+  * caller of [[writePointer]]). Parquet cannot be read and overwritten
+  * in place, so each refresh writes the NEXT `v=N` directory and
+  * renames `_CURRENT.tmp` over `_CURRENT`: a concurrent reader resolves
+  * the old or the new version, never a torn one.
   *
   * All IO goes through the Hadoop FileSystem/FileContext API resolved
   * from the path's scheme, so the same layout works on local disk,
-  * HDFS, and object stores with a Hadoop connector. The pointer flip
-  * uses `FileContext.rename(OVERWRITE)` — atomic on POSIX filesystems
-  * and HDFS. Object stores without atomic rename (e.g. S3A) get
-  * non-atomic last-writer-wins pointer replacement: still safe for the
-  * single-writer maintenance model (one refresh job per store), which
-  * is the documented deployment contract; concurrent UNCOORDINATED
-  * writers would need a lock service on such stores.
+  * HDFS, and object stores with a Hadoop connector. The pointer is a
+  * marker like any other: tmp + `FileContext.rename(OVERWRITE)` —
+  * atomic on POSIX filesystems and HDFS. Object stores without atomic
+  * rename (e.g. S3A) get non-atomic last-writer-wins pointer
+  * replacement: still safe for the single-writer maintenance model (one
+  * refresh job per store), which is the documented deployment
+  * contract; concurrent UNCOORDINATED writers would need a lock service
+  * on such stores.
   *
   * The pointer records `version:lastBatchId`. The batch id is the
-  * streaming high-water mark for stores maintained by a foreachBatch
-  * loop: a replayed micro-batch (at-least-once delivery after crash
-  * recovery) carries an id at or below the recorded one and is skipped,
-  * making the store's contents exactly-once. Batch-API writes record
-  * -1 (no stream). A bare `v` with no `:batch` suffix parses as
-  * `(v, -1)` so pre-existing state directories keep working.
+  * streaming high-water mark the replay fence
+  * ([[IncrementalStore.admits]]) checks; batch-API writes record -1 (no
+  * stream). A bare `v` with no `:batch` suffix parses as `(v, -1)` so
+  * pre-existing state directories keep working.
   */
 private[graft] object VersionedState {
 
@@ -43,20 +43,17 @@ private[graft] object VersionedState {
 
   private def fsOf(p: Path): FileSystem = p.getFileSystem(hadoopConf)
 
-  private def pointerPath(path: String) = new Path(path, "_CURRENT")
+  private val Pointer = "_CURRENT"
 
   def exists(path: String): Boolean = {
-    val p = pointerPath(path)
+    val p = new Path(path, Pointer)
     fsOf(p).exists(p)
   }
 
   /** `_CURRENT` content `v[:lastBatchId]` → (version, lastBatchId). */
   private def readPointer(path: String): (Long, Long) = {
-    val p = pointerPath(path)
-    val in = fsOf(p).open(p)
-    val s =
-      try new String(in.readAllBytes(), UTF_8).trim
-      finally in.close()
+    val s = readMarker(path, Pointer)
+      .getOrElse(throw new FileNotFoundException(s"$path/$Pointer"))
     s.split(':') match {
       case Array(v, b) => (v.toLong, b.toLong)
       case _           => (s.toLong, -1L)
@@ -84,37 +81,22 @@ private[graft] object VersionedState {
   def readVersion(spark: SparkSession, path: String, v: Long): DataFrame =
     spark.read.parquet(versionDir(path, v))
 
-  def writeVersion(state: DataFrame, path: String, v: Long,
-      batchId: Long = -1L): Unit = {
-    state.write.mode("overwrite").parquet(versionDir(path, v))
-    writePointer(path, v, batchId)
-  }
-
   /** Flip `_CURRENT` to `v` (recording the streaming high-water
-    * `batchId`): write `_CURRENT.tmp`, rename with OVERWRITE. The
-    * version directory must be complete before calling. */
-  def writePointer(path: String, v: Long, batchId: Long = -1L): Unit = {
-    val tmp = new Path(path, "_CURRENT.tmp")
-    val dst = pointerPath(path)
-    val fs = fsOf(dst)
-    val out = fs.create(tmp, true)
-    try out.write(s"$v:$batchId".getBytes(UTF_8))
-    finally out.close()
-    val fc = FileContext.getFileContext(fs.getUri, hadoopConf)
-    fc.rename(tmp, dst, Options.Rename.OVERWRITE)
-  }
+    * `batchId`). The version directory must be complete before
+    * calling. */
+  private[store] def writePointer(path: String, v: Long,
+      batchId: Long): Unit =
+    writeMarker(path, Pointer, s"$v:$batchId")
 
   /** Read a small sidecar marker file (e.g. a compaction base), None if
     * absent. */
   def readMarker(path: String, name: String): Option[String] = {
     val p = new Path(path, name)
-    val fs = fsOf(p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
+    try {
+      val in = fsOf(p).open(p)
       try Some(new String(in.readAllBytes(), UTF_8).trim)
       finally in.close()
-    }
+    } catch { case _: FileNotFoundException => None }
   }
 
   /** Write a sidecar marker atomically (tmp + rename-overwrite, the
@@ -130,23 +112,19 @@ private[graft] object VersionedState {
     fc.rename(tmp, dst, Options.Rename.OVERWRITE)
   }
 
-  /** Delete one version directory (compaction cleanup). */
-  def deleteVersion(path: String, v: Long): Unit = {
-    val p = new Path(versionDir(path, v))
-    val fs = fsOf(p)
-    if (fs.exists(p)) { fs.delete(p, true); () }
-  }
-
   /** Remove superseded versions; `grace` keeps that many below current
     * so a reader that resolved the pointer just before a flip still
     * finds its files. */
-  def compact(path: String, grace: Int = 1): Unit = {
-    val cur = currentVersion(path)
+  def compact(path: String, grace: Int = 1): Unit =
+    deleteVersionsBelow(path, currentVersion(path) - grace)
+
+  /** Delete every `v=N` directory with N below `v`. */
+  private[store] def deleteVersionsBelow(path: String, v: Long): Unit = {
     val dir = new Path(path)
     val fs = fsOf(dir)
     fs.listStatus(dir).toIndexedSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .filter(st => st.getPath.getName.drop(2).toLong < cur - grace)
+      .filter(st => st.getPath.getName.drop(2).toLong < v)
       .foreach(st => fs.delete(st.getPath, true))
   }
 }

@@ -22,11 +22,9 @@ import graft.analytics.TokenizerQueries
   * not merely an optimization — the spec pins a replayed batch to a
   * no-op.
   *
-  * Persistence is the shared [[VersionedState]] layout: versioned
-  * parquet + atomic `_CURRENT` flip, `compact` for superseded
-  * versions.
+  * Persistence is the shared [[MergeStore]] lifecycle.
   */
-object VocabStore {
+object VocabStore extends MergeStore {
 
   /** Partial state of one batch: its word counts. */
   def partial(docs: DataFrame): DataFrame =
@@ -40,19 +38,7 @@ object VocabStore {
       .agg(sum(col("cnt")).as("cnt"))
   }
 
-  // ---------------- persist-backed lifecycle ----------------
-
-  def initialize(docs: DataFrame, path: String, batchId: Long = -1L): Unit =
-    VersionedState.writeVersion(partial(docs), path, 1, batchId)
-
-  /** Fold a delta batch into the persisted vocabulary. */
-  def refresh(spark: SparkSession, delta: DataFrame, path: String,
-      batchId: Long = -1L): Unit = {
-    val state = VersionedState.readCurrent(spark, path)
-    VersionedState.writeVersion(
-      merge(state, partial(delta)), path,
-      VersionedState.currentVersion(path) + 1, batchId)
-  }
+  // ---------------- persisted reads ----------------
 
   /** The maintained `(word, cnt)` frame (read-only). */
   def wordFreq(spark: SparkSession, path: String): DataFrame =
@@ -134,32 +120,6 @@ object VocabStore {
       case _ => false
     }
   }
-
-  /** Drop superseded state versions. */
-  def compact(path: String, grace: Int = 1): Unit =
-    VersionedState.compact(path, grace)
-
-  /** One micro-batch of [[maintain]]. The batch fence is CORRECTNESS
-    * here (sum-merge double-counts on replay, unlike min-merge): a
-    * batch id at or below the persisted fence is skipped outright;
-    * empty batches advance the fence with a pointer-only flip. */
-  def maintainBatch(delta: DataFrame, path: String, batchId: Long): Unit = {
-    if (!VersionedState.exists(path)) {
-      if (!delta.isEmpty) initialize(delta, path, batchId)
-    } else if (batchId > VersionedState.lastBatchId(path)) {
-      if (delta.isEmpty) {
-        VersionedState.writePointer(path,
-          VersionedState.currentVersion(path), batchId)
-      } else refresh(delta.sparkSession, delta, path, batchId)
-    }
-  }
-
-  /** Maintain the vocabulary CONTINUOUSLY from a document stream. */
-  def maintain(stream: DataFrame, path: String):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (delta: DataFrame, batchId: Long) => maintainBatch(delta, path, batchId)
-    }
 
   // ---------------- the oracle contract ----------------
 

@@ -111,6 +111,10 @@ class InvertedIndexSpec extends SparkSpec {
     assert(scoresOf(InvertedIndex.probe(spark, dir,
       RetrievalQueries.QueryTerms)) == before)
     assert(before == oneShot)
+    // an idle trigger at the next id moves only the fence: no version
+    InvertedIndex.maintainBatch(docs.filter(lit(false)), dir, 2L)
+    assert(VersionedState.lastBatchId(dir) == 2L)
+    assert(VersionedState.currentVersion(dir) == 2L)
   }
 
   test("ix2: persisted shard occupancy sums to the corpus posting count") {

@@ -129,6 +129,10 @@ class SubstringIndexSpec extends SparkSpec {
     val vBefore = VersionedState.currentVersion(dir)
     SubstringIndex.maintainBatch(b2, dir, batchId = 2L)
     assert(VersionedState.currentVersion(dir) == vBefore)
+    // an idle trigger at the next id moves only the fence: no version
+    SubstringIndex.maintainBatch(b2.limit(0), dir, batchId = 3L)
+    assert(VersionedState.lastBatchId(dir) == 3L)
+    assert(VersionedState.currentVersion(dir) == vBefore)
     val got = byDoc(SubstringIndex.probeStore(spark, b3, dir))
     assert(got(20L) == ((35L, 7L, (u("h", 3) ++ u("i", 4)).mkString(" "))))
     // a doubled count would NOT change this verdict, so pin the state
