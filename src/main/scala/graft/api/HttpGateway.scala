@@ -492,11 +492,16 @@ final class HttpGateway(
             case e: IllegalArgumentException =>
               throw new IngestRejected(String.valueOf(e.getMessage))
           }
-        val n = writeLock.synchronized {
-          enrichAndStore(Seq(normalized -> df), runMappers = true,
-            cfCountry = cfCountry(ex), useDictionary = true)
+        val (stored, spiders) = writeLock.synchronized {
+          enrichAndStore(
+            Seq(normalized -> df.withColumn(graft.core.Names.MemberColumn, lit(0))),
+            runMappers = true, cfCountry = cfCountry(ex), useDictionary = true,
+            members = 1, writing = () => ())
         }
-        (200, s"""{"stored":$n}""")
+        if (spiders.nonEmpty)
+          throw new HttpGateway.ForbiddenRejected(
+            "Spiders are not allowed in Rakam Analytics.")
+        (200, s"""{"stored":${stored.getOrElse(0, 0L)}}""")
       } finally graft.TempDirs.release(dir)
     } else {
       val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
@@ -591,6 +596,15 @@ final class HttpGateway(
     out
   }
 
+  /** Rule-table mappers switch to their dictionary shape above this
+    * many raw event lines in the group: the measured crossover of the
+    * two shapes through [[applyBuiltins]] on a 3-core local session
+    * (CHANGES.md has the table). With few distinct user agents and
+    * referrers, per-row is faster to ~1,000 rows (the dictionary
+    * shape's extra jobs cost more than the chains it saves); with every
+    * value distinct, to ~2,000–3,000. */
+  private val DictionaryShapeThreshold = 1000
+
   /** The built-in enrichment stage every mapped ingest runs — the
     * reference registers these module mappers on the collect path
     * (EventCollectionHttpService.java:123-151): M1 timestamp skew, M5
@@ -599,10 +613,6 @@ final class HttpGateway(
     * registry first (registry-rejected fields are dropped from the
     * output, the custom-mapper discipline); the source-only trigger
     * fields themselves are dropped later by EventStore.write. */
-  /** Rule-table mappers switch to their dictionary shape above this
-    * many raw event lines in the request. */
-  private val DictionaryShapeThreshold = 64
-
   private def applyBuiltins(coll: String, df: DataFrame,
       cfCountry: Option[String] = None,
       useDictionary: Boolean = false): DataFrame = {
@@ -3156,21 +3166,21 @@ final class HttpGateway(
   /** Warehouse mutations serialize on this lock: ingest must observe a
     * consistent registry/MV/index state, and MV rebuilds and index
     * maintenance read-modify-write shared files. Parquet APPENDS
-    * themselves no longer need it — `EventStore.stagedAppend` gives
-    * every batch a private staging dir and publishes by atomic file
-    * moves, so concurrent appenders (threads or separate driver JVMs)
-    * cannot clobber each other's `_temporary` — but the cheap
-    * coarse lock stays for the single-gateway deployment, where it
-    * also orders registry evolution against writes. The multi-driver
-    * story (what is safe across gateways, what still needs a single
-    * scheduler) is SCALE.md §"Multi-driver writes". Reads (queries,
-    * analysis routes) stay fully concurrent on the pool. */
+    * themselves do not need it — `EventStore.stagedAppend` gives every
+    * batch a private staging dir and publishes by atomic file moves —
+    * but the coarse lock orders registry evolution against writes in
+    * one gateway. The JSON ingest doors share its cost by GROUP COMMIT
+    * ([[ingestAndStore]]): a request queues as a [[Member]] while
+    * another group commits, and the next committer takes the lock and
+    * commits every queued request with its options in one ingest →
+    * enrich → store → view pass. A group is exactly the set of requests
+    * already waiting — no timer, no size cap; the 8-thread handler pool
+    * bounds it — so a lone request pays nothing extra.
+    * Groups are per gateway JVM; the multi-driver story is SCALE.md
+    * §"Multi-driver writes". Reads (queries, analysis routes) stay
+    * fully concurrent on the pool. */
   private val writeLock = new Object
 
-  /** Ingest raw event lines through the standard two-pass path and
-    * append each collection to the store; dead letters go to the
-    * `$invalid_schema` table exactly as in the batch pipeline. Returns
-    * rows stored. */
   /** Cloudflare's country header — read only when the gateway carries a
     * geo dim, exactly the reference's gate
     * (MaxmindGeoIPEventMapper.java:190-196, header name verbatim). */
@@ -3178,46 +3188,149 @@ final class HttpGateway(
     if (geoRanges.isEmpty) None
     else Option(ex.getRequestHeaders.getFirst("HTTP_CF_IPCOUNTRY")).filter(_.nonEmpty)
 
+  /** One request's share of a group commit: its raw event lines, the
+    * options every member of its group shares, and the outcome its
+    * group's committer fills in. */
+  private final class Member(val lines: Seq[String], val runMappers: Boolean,
+      val cfCountry: Option[String]) {
+    def key: (Boolean, Option[String]) = (runMappers, cfCountry)
+    @volatile var result: Option[scala.util.Try[Long]] = None
+  }
+
+  /** Members waiting for a committer, in arrival order, and whether a
+    * group commit runs now — both guarded by `queued`'s monitor, which
+    * a commit never holds, so a finished member wakes and returns
+    * without waiting for [[writeLock]]. */
+  private val queued = scala.collection.mutable.ArrayBuffer.empty[Member]
+  private var committing = false
+
+  /** Whether a group commits now, and how many requests wait. */
+  private[api] def ingestQueue: (Boolean, Int) =
+    queued.synchronized((committing, queued.size))
+
+  /** Ingest raw event lines through the standard two-pass path and
+    * append each collection to the store; dead letters go to the
+    * `$invalid_schema` table exactly as in the batch pipeline. Returns
+    * rows stored. A group commit: the request queues and waits while
+    * another group commits. If that commit ran it, its outcome is
+    * returned (or its exception rethrown) here, on the request's own
+    * thread; otherwise this thread takes [[writeLock]] and commits
+    * every queued request with the same options, in arrival order, as
+    * one [[commitGroup]]. */
   private def ingestAndStore(lines: Seq[String],
       runMappers: Boolean = true,
-      cfCountry: Option[String] = None): Long = writeLock.synchronized {
-    val res = JsonIngest.ingest(spark, registry, project,
-      spark.sparkContext.parallelize(lines, 1))
+      cfCountry: Option[String] = None): Long = {
+    val me = new Member(lines, runMappers, cfCountry)
+    val group = queued.synchronized {
+      queued += me
+      while (me.result.isEmpty && committing) queued.wait()
+      if (me.result.isDefined) Nil
+      else {
+        committing = true
+        val g = queued.filter(_.key == me.key).toSeq
+        queued.filterInPlace(_.key != me.key)
+        g
+      }
+    }
+    if (group.nonEmpty)
+      try writeLock.synchronized(commitGroup(group))
+      finally queued.synchronized { committing = false; queued.notifyAll() }
+    me.result.get.get
+  }
+
+  /** Commit a group and fill in every member's outcome. A group that
+    * fails before its first store write is re-run member by member, so
+    * each error lands on its own request; a failure after the write
+    * began goes to every member, as it would to a lone request. */
+  private def commitGroup(group: Seq[Member]): Unit = {
+    var writing = false
     try {
-      val n = enrichAndStore(res.byCollection.toSeq, runMappers, cfCountry,
-        useDictionary = lines.length > DictionaryShapeThreshold)
-      if (!res.deadLetter.isEmpty)
-        EventStore.writeDeadLetter(res.deadLetter, warehouse, project)
-      n
+      val stored = storeGroup(group, () => writing = true)
+      group.zip(stored).foreach { case (m, r) => m.result = Some(r) }
+    } catch {
+      case NonFatal(_) if !writing && group.size > 1 =>
+        group.foreach(m => commitGroup(Seq(m)))
+      case e: Throwable =>
+        group.foreach(_.result = Some(scala.util.Failure(e)))
+    }
+  }
+
+  /** One JsonIngest → mappers → spider gate → store → view →
+    * dead-letter pass over every member's lines, each line tagged with
+    * its member's ordinal. The outcome per member: rows stored, or the
+    * spider rejection. */
+  private def storeGroup(group: Seq[Member],
+      writing: () => Unit): Seq[scala.util.Try[Long]] = {
+    val (runMappers, cfCountry) = group.head.key
+    val lines = group.zipWithIndex.flatMap { case (m, i) => m.lines.map(i -> _) }
+    val res = JsonIngest.ingestTagged(spark, registry, project,
+      spark.sparkContext.parallelize(lines, 1),
+      evolved = colls => if (runMappers) colls.foreach(registerMapperFields(_, cfCountry)))
+    try {
+      val (stored, spiders) = enrichAndStore(res.byCollection.toSeq,
+        runMappers, cfCountry,
+        useDictionary = lines.length > DictionaryShapeThreshold,
+        members = group.size, writing)
+      val dead =
+        if (spiders.isEmpty) res.deadLetter
+        else res.deadLetter.filter(!col(graft.core.Names.MemberColumn)
+          .isin(spiders.toSeq: _*))
+      if (spiders.size < group.size && !dead.isEmpty)
+        EventStore.writeDeadLetter(dead.drop(graft.core.Names.MemberColumn),
+          warehouse, project)
+      group.indices.map { i =>
+        if (spiders(i)) scala.util.Failure(new HttpGateway.ForbiddenRejected(
+          "Spiders are not allowed in Rakam Analytics."))
+        else scala.util.Success(stored.getOrElse(i, 0L))
+      }
     } finally res.unpersist()
   }
 
+  /** Evolve the registry for the fields the mappers derive from a
+    * collection's rows, as of its current schema: the mapper chain over
+    * an empty frame of that schema — registry side effects, no job. A
+    * group runs it between two members' registry evolutions, so its
+    * registry ends as the serial order would leave it. */
+  private def registerMapperFields(coll: String, cfCountry: Option[String]): Unit =
+    registry.sparkSchema(project, coll).foreach { st =>
+      val empty = spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), st)
+      applyMappers(coll, applyBuiltins(coll, empty, cfCountry),
+        scala.collection.mutable.Buffer.empty)
+      ()
+    }
+
   /** The shared enrich → gate → store pipeline behind every ingest door
-    * (JSON lines via [[ingestAndStore]]; the CSV/Avro bulk bodies feed
-    * typed frames in directly). Phase 1: the built-in module mappers,
-    * then stored custom mappers (the reference's mapper stage, SURVEY
-    * §4 step 3); a mapper that drops a row keeps it out of the store
-    * AND the stored count; `/event/copy` opts out (mapEvents=false).
-    * The spider gate runs on every collection BEFORE anything is
-    * written, so a rejected request never stores a partial batch — the
-    * reference throws FORBIDDEN from the mapper stage, before storage
-    * (UserAgentEventMapper.java:87-90). Each enriched frame is
-    * PERSISTED: the gate, the count, the write and every MV delta
-    * would otherwise re-execute the whole mapper chain per action —
-    * and re-fire the log accumulator, duplicating logger entries. */
+    * (grouped JSON lines via [[storeGroup]]; the CSV/Avro bulk bodies
+    * feed typed frames in directly, as a group of one). Every frame
+    * carries the member column [[graft.core.Names.MemberColumn]].
+    * Phase 1: the built-in module mappers, then stored custom mappers
+    * (the reference's mapper stage, SURVEY §4 step 3); a mapper that
+    * drops a row keeps it out of the store AND the stored count;
+    * `/event/copy` opts out (mapEvents=false). Phase 2, before anything
+    * is written: one job per collection counts each member's rows and
+    * flags its spider rows. A member with spider rows is rejected
+    * whole and none of its rows are written — the reference throws
+    * FORBIDDEN from the mapper stage, before storage
+    * (UserAgentEventMapper.java:87-90) — while the other members store.
+    * Each enriched frame is PERSISTED: the gate, the write and every MV
+    * delta would otherwise re-execute the whole mapper chain per action
+    * — and re-fire the log accumulator, duplicating logger entries.
+    * Returns (rows stored per member ordinal, the rejected members);
+    * `writing` is called before the first store write. */
   private def enrichAndStore(byCollection: Seq[(String, DataFrame)],
       runMappers: Boolean, cfCountry: Option[String],
-      useDictionary: Boolean): Long = {
-    var n = 0L
+      useDictionary: Boolean, members: Int,
+      writing: () => Unit): (Map[Int, Long], Set[Int]) = {
+    val member = graft.core.Names.MemberColumn
     val logSinks = scala.collection.mutable.Buffer.empty[
       (String, org.apache.spark.util.CollectionAccumulator[(String, String)])]
     // Persisted frames are tracked as they are CREATED, not after the
-    // whole `prepared` list is assembled: the spider gate throws from
-    // inside the map below (and the gate's isEmpty action can fail),
-    // so a finally that only covered the post-assembly phase would
-    // leak every frame cached before the throw — and bot traffic hits
-    // that path on every request, accumulating cached blocks without
-    // bound in a long-lived gateway JVM.
+    // whole `prepared` list is assembled: a mapper or the gate's job
+    // can throw, and a finally that only covered the post-assembly
+    // phase would leak every frame cached before the throw —
+    // accumulating cached blocks without bound in a long-lived gateway
+    // JVM.
     val cached = scala.collection.mutable.Buffer.empty[DataFrame]
     try {
       val prepared = byCollection.map { case (coll, df0) =>
@@ -3229,22 +3342,38 @@ final class HttpGateway(
             cached += enriched
             enriched
           } else df0
-        if (runMappers && df.columns.contains("_device_family") &&
-            !df.filter(org.apache.spark.sql.functions
-              .col("_device_family") === "Spider").isEmpty)
-          throw new HttpGateway.ForbiddenRejected(
-            "Spiders are not allowed in Rakam Analytics.")
         coll -> df
       }
-      prepared.foreach { case (coll, df) =>
-        n += df.count()
-        EventStore.write(df, warehouse, project, coll)
-        // continuous maintenance: the stored batch is also the delta
-        // for every materialized view on this collection
-        maintainMvs(coll, df)
+      // (member, rows, has spider rows) per collection
+      val counts = prepared.map { case (_, df) =>
+        val spider =
+          if (runMappers && df.columns.contains("_device_family"))
+            coalesce(col("_device_family") === "Spider", lit(false))
+          else lit(false)
+        df.groupBy(member).agg(count(lit(1)), max(spider)).collect().toSeq
+          .map(r => (r.getInt(0), r.getLong(1), r.getBoolean(2)))
       }
-      appendJsLogs(logSinks.toSeq)
-      n
+      val spiders = counts.flatten.collect { case (m, _, true) => m }.toSet
+      val stored = counts.flatten.collect { case (m, n, _) if !spiders(m) => m -> n }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      if (spiders.size < members) {
+        // with rejected members, a collection only they filled is skipped
+        prepared.zip(counts).filter { case (_, cs) =>
+          spiders.isEmpty || cs.exists(c => !spiders(c._1))
+        }.foreach { case ((coll, df), _) =>
+          val kept =
+            if (spiders.isEmpty) df
+            else df.filter(!col(member).isin(spiders.toSeq: _*))
+          val out = kept.drop(member)
+          writing()
+          EventStore.write(out, warehouse, project, coll)
+          // continuous maintenance: the stored batch is also the delta
+          // for every materialized view on this collection
+          maintainMvs(coll, out)
+        }
+        appendJsLogs(logSinks.toSeq)
+      }
+      (stored, spiders)
     } finally cached.foreach(_.unpersist())
   }
 

@@ -87,6 +87,11 @@ object FieldType {
 object Names {
   private val MaxCollectionName = 100
 
+  /** The member-ordinal column a grouped ingest tags each row with
+    * (which request of the group it came from). [[normalizeField]]
+    * lowercases every field, so no event field can carry this name. */
+  val MemberColumn = "_Member"
+
   def normalizeField(raw: String): Either[String, String] = {
     val stripped = raw.replace("\"", "").replace("'", "").trim
     if (stripped.isEmpty) return Left(s"empty field name: '$raw'")

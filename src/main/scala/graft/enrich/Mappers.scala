@@ -45,13 +45,19 @@ final case class TimestampMapper(nowMillis: Long) extends EventMapper {
   val name = "timestamp"
   override def constantFields = Seq("_time" -> FieldType.TIMESTAMP)
   def apply(df: DataFrame): DataFrame = {
-    val serverNow = timestamp_millis(lit(nowMillis / 1000 * 1000))
+    // the clock enters through zero-argument functions, not literals:
+    // codegen inlines a long literal into the generated source, so a
+    // new `now` per batch would miss Spark's compiled-code cache and
+    // recompile the whole fused mapper projection (~1 s with the rule
+    // tables) on every gateway request
+    val ms = nowMillis
+    val serverNow = timestamp_millis(udf(() => ms / 1000 * 1000).apply())
     val hasUpload = df.columns.contains("_upload_time")
     val corrected: Column =
       if (hasUpload)
         when(col("_time").isNotNull && col("_upload_time").isNotNull,
           timestamp_millis(unix_millis(col("_time")) +
-            (lit(nowMillis) - col("_upload_time"))))
+            (udf(() => ms).apply() - col("_upload_time"))))
           .otherwise(col("_time"))
       else col("_time")
     val base = if (df.columns.contains("_time")) corrected
@@ -466,8 +472,10 @@ case object UserIdMapper extends EventMapper {
       col("_anonymous_user") else lit(null).cast("string")
     val existing = if (df.columns.contains("_user"))
       col("_user").cast("string") else lit(null).cast("string")
+    // a grouped ingest's member ordinal is not event content
+    val content = df.columns.filterNot(_ == graft.core.Names.MemberColumn)
     val surrogate = concat(lit("anon_"),
-      sha2(to_json(struct(df.columns.map(col).toIndexedSeq: _*)), 256).substr(1, 16))
+      sha2(to_json(struct(content.map(col).toIndexedSeq: _*)), 256).substr(1, 16))
     df.withColumn("_user", coalesce(existing, anon, surrogate))
   }
 }

@@ -1,6 +1,6 @@
 package graft.enrich.js
 
-import graft.core.FieldType
+import graft.core.{FieldType, Names}
 import graft.enrich.{EventMapper, EventProxy}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
@@ -115,6 +115,26 @@ object JsCustomMapper {
   /** Logger entries shipped per partition at most — bounds the
     * accumulator against a script logging per row. */
   val MaxLogsPerPartition = 1000
+
+  /** Consecutive runs of at most `limit` rows; with `keyIdx` ≥ 0 a run
+    * also ends where the value at `keyIdx` changes. */
+  private[js] def chunks(it: Iterator[Row], limit: Int,
+      keyIdx: Int): Iterator[Vector[Row]] = {
+    val in = it.buffered
+    new Iterator[Vector[Row]] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Vector[Row] = {
+        val key = if (keyIdx < 0) null else in.head.get(keyIdx)
+        val b = Vector.newBuilder[Row]
+        var n = 0
+        while (n < limit && in.hasNext &&
+            (keyIdx < 0 || in.head.get(keyIdx) == key)) {
+          b += in.next(); n += 1
+        }
+        b.result()
+      }
+    }
+  }
 
   /** Align a script-produced value to the column's DECLARED Spark type.
     * In the sandbox every integer literal is a Long and float math a
@@ -275,8 +295,11 @@ final case class JsCustomMapper(
     val outSchema = StructType(df.schema.fields ++
       produced.filterNot(p => inNames.contains(p._1))
         .map(p => StructField(p._1, p._2.spark, nullable = true)))
-    val outNames = outSchema.fieldNames.toSeq
-    val outTypes = outSchema.fields.map(_.dataType).toSeq
+    val outCols = outSchema.fields.map(f => (f.name, f.dataType)).toSeq.zipWithIndex
+    // a grouped ingest's member ordinal: hidden from the script, and a
+    // chunk ends where it changes, so one invocation sees one request
+    val memberIdx = inNames.indexOf(Names.MemberColumn)
+    val visible = inNames.zipWithIndex.filter(_._2 != memberIdx)
     val codeStr = code
     val coll = collection
     val paramMap = params
@@ -293,10 +316,11 @@ final case class JsCustomMapper(
       // partition materialized as proxies would OOM the executor. Only
       // chunkRows proxies are live at a time; the engine (compiled
       // script) is reused across chunks.
-      it.grouped(chunkRows).flatMap { chunk =>
+      JsCustomMapper.chunks(it, chunkRows, memberIdx).flatMap { chunk =>
+        val member = if (memberIdx < 0) null else chunk.head.get(memberIdx)
         val proxies = chunk.map { row =>
           new EventProxy(coll,
-            inNames.zipWithIndex.map { case (n, i) => n -> row.get(i) }.toMap)
+            visible.map { case (n, i) => n -> row.get(i) }.toMap)
         }
         val rowIt = proxies.iterator
         val eventsProxy = new MiniJs.HostObject {
@@ -324,8 +348,9 @@ final case class JsCustomMapper(
         }
         // chunk order is row order, so visited-then-rest equals in-order
         proxies.iterator.filterNot(_.dropped)
-          .map(p => Row.fromSeq(outNames.zip(outTypes)
-            .map { case (n, t) => JsCustomMapper.normalize(p.get(n), t) }))
+          .map(p => Row.fromSeq(outCols.map { case ((n, t), i) =>
+            if (i == memberIdx) member else JsCustomMapper.normalize(p.get(n), t)
+          }))
       }
     }
     df.sparkSession.createDataFrame(rows, outSchema)

@@ -224,10 +224,11 @@ object JsonIngest {
     * types, per-field failures recorded as dead letters with event
     * identity (JsonEventDeserializer.java:85-93 — api.uuid plus
     * best-effort _user/_time). Operates on the single-parse [[Digest]]'s
-    * normalized property map — the raw line is never re-parsed. */
+    * normalized property map — the raw line is never re-parsed. The
+    * row ends with the event's member ordinal. */
   private def typedRow(fields: Seq[(String, String)], c: String,
-      byNorm: Map[String, JsonNode],
-      eventId: String): (String, Row, Vector[DeadLetter]) = {
+      byNorm: Map[String, JsonNode], eventId: String,
+      member: Int): (String, Row, Vector[DeadLetter]) = {
     val dlUser = byNorm.get("_user").map(_.asText()).orNull
     val dlTime = byNorm.get("_time").flatMap { n =>
       if (n.isNumber) Some(java.sql.Timestamp.from(Instant.ofEpochMilli(n.asLong())))
@@ -247,7 +248,7 @@ object JsonIngest {
           }
       }
     }
-    (c, Row.fromSeq(values), dead.result())
+    (c, Row.fromSeq(values :+ member), dead.result())
   }
 
   // ---- the single-parse batch ingest ----
@@ -255,13 +256,15 @@ object JsonIngest {
   /** One event's single-parse digest — everything BOTH downstream passes
     * need, so the raw line is Jackson-parsed exactly once (the r15
     * driver bench showed the old inference+parse double parse dominating
-    * the ingest whales s1/s5). `props` None = the reference's
+    * the ingest whales s1/s5). `member` is the line's member ordinal
+    * ([[ingestTagged]]); `props` None = the reference's
     * "properties is null" rejection (dead-lettered, no skeleton);
     * `skeleton` is the inference view (normalized name → type name,
     * fields with no type evidence absent); `propsRepr`/`lineSnippet`
     * feed dead-letter rows. JsonNode is Serializable, so the cached
     * digest RDD spills cleanly. */
   private[ingest] final case class Digest(
+      member: Int,
       c: String,
       props: Option[Map[String, JsonNode]],
       skeleton: Map[String, String],
@@ -269,17 +272,46 @@ object JsonIngest {
       propsRepr: String,
       lineSnippet: String)
 
+  /** Ingest one batch: [[ingestTagged]] with every line in member 0,
+    * the member column dropped from the outputs. */
   def ingest(spark: SparkSession, registry: SchemaRegistry, project: String,
       rawJson0: RDD[String]): IngestResult = {
+    val res = ingestTagged(spark, registry, project, rawJson0.map(l => (0, l)))
+    res.copy(
+      byCollection = res.byCollection.map { case (c, df) =>
+        c -> df.drop(Names.MemberColumn)
+      },
+      deadLetter = res.deadLetter.drop(Names.MemberColumn))
+  }
+
+  /** Ingest the lines of several requests (members) as one batch, each
+    * line tagged with its member's ordinal, ordinals in arrival order.
+    * Every output frame — each collection's typed rows and the dead
+    * letters — carries the ordinal as an INT column
+    * [[Names.MemberColumn]], last. The registry evolves as if the
+    * members had been ingested one after another in ordinal order: one
+    * `getOrCreate` per member and collection, USER_TYPE set by the
+    * first member carrying `_user`, so a type conflict between members
+    * resolves the way the serial order would; values are then parsed
+    * once against the evolved schemas. Within one member, a conflict
+    * resolves by the lexicographic rule below. `evolved` is called with
+    * a member's collections after its evolution whenever a later
+    * member's evolution would change the registry: the point at which
+    * a caller evolves the fields it derives from that member's rows
+    * (the gateway's mapper-produced fields), as the serial order would
+    * have before the next member. */
+  def ingestTagged(spark: SparkSession, registry: SchemaRegistry,
+      project: String, tagged: RDD[(Int, String)],
+      evolved: Seq[String] => Unit = _ => ()): IngestResult = {
 
     // THE Jackson pass — the only traversal of the raw lines, so any
     // upstream pipeline that produced them (pixel decode, webhook JS, a
     // remote fetch) also runs once. The digest RDD is the cache point
     // both downstream passes (schema reduce, typed parse) read; bounded
     // by batch size, spills to disk, released by IngestResult.unpersist().
-    val digests: RDD[Digest] = rawJson0.mapPartitions { it =>
+    val digests: RDD[Digest] = tagged.mapPartitions { it =>
       val m = new ObjectMapper()
-      it.flatMap { line =>
+      it.flatMap { case (member, line) =>
         Try(m.readTree(line)).toOption.flatMap { root =>
           textualCollection(root)
             .flatMap(c => Names.normalizeCollection(c).toOption)
@@ -288,7 +320,7 @@ object JsonIngest {
                 .flatMap(a => Option(a.get("uuid"))).map(_.asText()).orNull
               objectProperties(root) match {
                 case None =>
-                  Digest(c, None, Map.empty, eventId,
+                  Digest(member, c, None, Map.empty, eventId,
                     String.valueOf(root.get("properties")).take(200),
                     line.take(200))
                 case Some(props) =>
@@ -310,7 +342,7 @@ object JsonIngest {
                         t.map(tt => name -> tt.name)
                       }
                     }.toMap
-                  Digest(c, Some(byNorm), skeleton, eventId, null,
+                  Digest(member, c, Some(byNorm), skeleton, eventId, null,
                     line.take(200))
               }
             }
@@ -320,95 +352,109 @@ object JsonIngest {
     digests.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Schema reduce: the per-event skeletons fold to one union schema
-    // per collection. Properties-less events contribute NO skeleton (a
-    // collection whose every line lacks a valid properties object is
-    // never registered — it dead-letters whole, reference behavior).
-    val skeletons: Map[String, Map[String, String]] = digests
+    // per member and collection. Properties-less events contribute NO
+    // skeleton (a collection whose every line lacks a valid properties
+    // object is never registered — it dead-letters whole, reference
+    // behavior).
+    val skeletons: Map[Int, Map[String, Map[String, String]]] = digests
       .filter(_.props.isDefined)
-      .map(d => d.c -> d.skeleton)
+      .map(d => (d.member, d.c) -> d.skeleton)
       .reduceByKey { (a, b) =>
-        // union on names; on a type conflict inside one batch pick the
+        // union on names; on a type conflict inside one member pick the
         // lexicographically smaller type name — deterministic regardless
-        // of partition reduce order (registry order decides across batches)
+        // of partition reduce order (registry order decides across
+        // members and batches)
         (a.keySet ++ b.keySet).map { k =>
           k -> ((a.get(k), b.get(k)) match {
             case (Some(x), Some(y)) => if (x <= y) x else y
             case (x, y) => x.orElse(y).get
           })
         }.toMap
-      }.collect().toMap
-
-    // USER_TYPE set-once across collections (InternalConfig.java:5-7).
-    // When two collections in one FIRST batch disagree on _user's type,
-    // the winner must not depend on Map iteration order: pick the
-    // lexicographically smallest (collection, type) — the same rule the
-    // intra-batch skeleton conflict fold uses above (r16 verdict #4).
-    skeletons.toSeq
-      .flatMap { case (c, fs) => fs.get("_user").map(t => (c, t)) }
-      .minOption.foreach { case (_, ut) =>
-        registry.setOnce(project, "USER_TYPE", ut)
+      }.collect().groupBy(_._1._1).map { case (member, kvs) =>
+        member -> kvs.map { case ((_, c), fs) => c -> fs }.toMap
       }
-    val userT = registry.config(project, "USER_TYPE")
 
-    // Registry evolution (union-only) per collection.
-    val regResults = skeletons.map { case (c, fs) =>
-      val fields = fs.map { case (n, t) =>
-        val tpe = if (n == "_user" && userT.isDefined) FieldType.fromName(userT.get)
-          else FieldType.fromName(t)
-        registry.Field(n, tpe)
-      }.toSeq
-      c -> registry.getOrCreate(project, c, fields)
+    // Registry evolution (union-only), member by member in ordinal
+    // order. A (member, collection) whose evolved schema has NO fields
+    // at all (every event's properties empty) has nothing storable — a
+    // zero-column frame would either crash the partitioned write or
+    // count phantom "stored" rows — so its lines dead-letter.
+    val latest = scala.collection.mutable.Map.empty[String, Seq[registry.Field]]
+    val storable = Set.newBuilder[(Int, String)]
+    val rejected = Seq.newBuilder[(String, String, String)]
+    val order = skeletons.keys.toSeq.sorted
+    order.zipWithIndex.foreach { case (member, i) =>
+      val byColl = skeletons(member)
+      // USER_TYPE set-once across collections (InternalConfig.java:5-7).
+      // When two collections in one member disagree on _user's type,
+      // the winner must not depend on Map iteration order: pick the
+      // lexicographically smallest (collection, type) — the same rule
+      // the skeleton conflict fold uses above (r16 verdict #4).
+      byColl.toSeq
+        .flatMap { case (c, fs) => fs.get("_user").map(t => (c, t)) }
+        .minOption.foreach { case (_, ut) =>
+          registry.setOnce(project, "USER_TYPE", ut)
+        }
+      val userT = registry.config(project, "USER_TYPE")
+      byColl.foreach { case (c, fs) =>
+        val fields = fs.map { case (n, t) =>
+          val tpe = if (n == "_user" && userT.isDefined) FieldType.fromName(userT.get)
+            else FieldType.fromName(t)
+          registry.Field(n, tpe)
+        }.toSeq
+        val (schema, rej) = registry.getOrCreate(project, c, fields)
+        latest(c) = schema
+        if (schema.nonEmpty) storable += member -> c
+        rejected ++= rej.map(r => (c, r.field, r.reason))
+      }
+      if (order.drop(i + 1).exists(m => evolves(registry, project, skeletons(m))))
+        evolved(byColl.keys.toSeq)
     }
-    // a collection with NO fields at all (every event's properties
-    // empty) has nothing storable — a zero-column frame would either
-    // crash the partitioned write or count phantom "stored" rows, so
-    // such collections don't materialize and their lines dead-letter
-    val registered = regResults.collect {
-      case (c, (schema, _)) if schema.nonEmpty => c -> schema
-    }
-    val rejected = regResults.toSeq.flatMap { case (c, (_, rej)) =>
-      rej.map(r => (c, r.field, r.reason))
-    }
+    val registered = latest.toMap.filter(_._2.nonEmpty)
 
     // Typed parse with dead-letter side output — over the cached
     // digests, never the raw lines: no second Jackson parse, no second
     // name-normalization sweep.
-    val schemaB = spark.sparkContext.broadcast(
-      registered.map { case (c, fs) => c -> fs.map(f => (f.name, f.tpe.name)) })
+    val schemaB = spark.sparkContext.broadcast((
+      registered.map { case (c, fs) => c -> fs.map(f => (f.name, f.tpe.name)) },
+      storable.result()))
 
     val parsed = digests.mapPartitions { it =>
-      val schemas = schemaB.value
+      val (schemas, storableB) = schemaB.value
       it.map { d =>
         d.props match {
           case None =>
             // the reference's "properties is null" rejection —
             // RECORDED, not silently dropped: a multi-event batch
             // must account for every lost event
-            (d.c, null, Vector(DeadLetter(d.c, "(properties)", "OBJECT",
+            (d.member, d.c, null, Vector(DeadLetter(d.c, "(properties)", "OBJECT",
               "properties is missing or not an object",
               d.propsRepr, d.eventId, null, null)))
-          case Some(_) if !schemas.contains(d.c) =>
-            (d.c, null, Vector(DeadLetter(d.c, "(event)", "ROW",
+          case Some(_) if !storableB.contains(d.member -> d.c) =>
+            (d.member, d.c, null, Vector(DeadLetter(d.c, "(event)", "ROW",
               "collection has no storable fields",
               d.lineSnippet, d.eventId, null, null)))
           case Some(byNorm) =>
-            typedRow(schemas(d.c), d.c, byNorm, d.eventId)
+            val (c, row, dead) =
+              typedRow(schemas(d.c), d.c, byNorm, d.eventId, d.member)
+            (d.member, c, row, dead)
         }
       }
     }
     parsed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
+    val member = StructField(Names.MemberColumn, IntegerType, nullable = false)
     val byCollection = registered.map { case (c, fs) =>
-      val st = StructType(fs.map(f => StructField(f.name, f.tpe.spark, nullable = true)))
+      val st = StructType(fs.map(f => StructField(f.name, f.tpe.spark, nullable = true)) :+ member)
       c -> spark.createDataFrame(
-        parsed.filter(t => t._1 == c && t._2 != null).map(_._2), st)
+        parsed.filter(t => t._2 == c && t._3 != null).map(_._3), st)
     }
     val dead = spark.createDataFrame(
-      parsed.flatMap(_._3).map(d =>
+      parsed.flatMap(t => t._4.map(d =>
         Row(d.collection, d.property, d.targetType, d.error, d.encodedValue,
-          d.eventId, d.user, d.time)),
-      deadLetterSchema)
-    IngestResult(byCollection, dead, rejected, Some(parsed), Some(digests))
+          d.eventId, d.user, d.time, t._1))),
+      deadLetterSchema.add(member))
+    IngestResult(byCollection, dead, rejected.result(), Some(parsed), Some(digests))
   }
 
   // ---- single-pass unified fan-out ----
@@ -436,7 +482,7 @@ object JsonIngest {
   def ingestUnified(spark: SparkSession, registry: SchemaRegistry,
       project: String, rawJson: RDD[String]): (DataFrame, IngestResult) = {
     val res = ingest(spark, registry, project, rawJson)
-    val parsed = res.cached.get.asInstanceOf[RDD[(String, Row, Vector[DeadLetter])]]
+    val parsed = res.cached.get.asInstanceOf[RDD[(Int, String, Row, Vector[DeadLetter])]]
     val colSchemas: Seq[(String, Seq[(String, String)])] =
       res.byCollection.keys.toSeq.sorted.map { c =>
         c -> registry.schema(project, c).get.map(f => (f.name, f.tpe.name))
@@ -462,7 +508,7 @@ object JsonIngest {
     val nGlobal = global.size
     val unifiedRows = parsed.mapPartitions { it =>
       val pl = placementB.value
-      it.map { case (c, row, _) =>
+      it.map { case (_, c, row, _) =>
         val arr = new Array[Any](nGlobal + 1)
         arr(0) = c
         val pos = pl(c)
@@ -494,6 +540,17 @@ object JsonIngest {
         coalesce(col("n_stored"), lit(0L)).as("n_stored"),
         coalesce(col("n_dead"), lit(0L)).as("n_dead"))
   }
+
+  /** Whether evolving one member's per-collection skeletons would
+    * change the registry: a collection or field it does not hold yet,
+    * or the first `_user` of the project. Type conflicts change nothing
+    * (the registered type wins). */
+  private def evolves(registry: SchemaRegistry, project: String,
+      byColl: Map[String, Map[String, String]]): Boolean =
+    byColl.exists { case (c, fs) =>
+      registry.schema(project, c).forall(s => !fs.keySet.subsetOf(s.map(_.name).toSet)) ||
+        (fs.contains("_user") && registry.config(project, "USER_TYPE").isEmpty)
+    }
 
   /** `_user` is STRING/LONG only (arrays/maps rejected,
     * JsonEventDeserializer.java:390-397). */

@@ -6,6 +6,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import graft.SparkSpec
 import graft.core.SchemaRegistry
 import graft.ingest.BatchSources
+import graft.store.EventStore
 
 /** The HTTP facade drives the REAL engine paths end-to-end over a live
   * socket: collect → typed store → segmentation read, the signed batch
@@ -2276,6 +2277,228 @@ class HttpGatewaySpec extends SparkSpec {
       assert(get(port, "/admin/lock_key?lock_key=s3cret").body() == "true")
       assert(get(port, "/admin/lock_key?lock_key=wrong").body() == "false")
       assert(get(port, "/admin/lock_key").body() == "false")
+    } finally gw.stop()
+  }
+
+  // ---------------- group commit ----------------
+
+  private def postAsync(port: Int, path: String, body: String,
+      headers: (String, String)*): java.util.concurrent.CompletableFuture[HttpResponse[String]] = {
+    val b = HttpRequest.newBuilder(URI.create(s"http://localhost:$port$path"))
+      .POST(HttpRequest.BodyPublishers.ofString(body))
+    headers.foreach { case (k, v) => b.header(k, v) }
+    client.sendAsync(b.build(), HttpResponse.BodyHandlers.ofString())
+  }
+
+  /** A 2,000-event `/event/bulk` body into the `hold` collection (no
+    * `_user`, so it leaves the project's USER_TYPE unset). */
+  private val holdBody = (1 to 2000).map(i =>
+    s"""{"collection": "hold", "properties": {"_time": "2026-01-15 10:00:00.000", "n": $i}}""")
+    .mkString("""{"api": {"api_key": "k"}, "events": [""", ",", "]}")
+
+  /** Keep the ingest path busy with the `hold` bulk, then send
+    * `requests` while its commit runs, each once the one before has
+    * queued: they queue in that order, all at once, so the next commit
+    * takes them as one group. Returns their responses, in order. */
+  private def behindBulk(gw: HttpGateway, port: Int,
+      requests: Seq[() => java.util.concurrent.CompletableFuture[HttpResponse[String]]])
+      : Seq[HttpResponse[String]] = {
+    def await(what: String)(p: => Boolean): Unit = {
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!p) {
+        assert(System.nanoTime() < deadline, s"timed out waiting until $what")
+        Thread.sleep(2)
+      }
+    }
+    val bulk = postAsync(port, "/event/bulk", holdBody)
+    await("the bulk's commit began")(gw.ingestQueue == (true, 0))
+    val sent = requests.zipWithIndex.map { case (r, i) =>
+      val f = r()
+      await(s"request $i queued")(gw.ingestQueue == (true, i + 1))
+      f
+    }
+    val out = sent.map(_.get(180, java.util.concurrent.TimeUnit.SECONDS))
+    val held = bulk.get(180, java.util.concurrent.TimeUnit.SECONDS)
+    assert(held.body() == """{"stored":2000}""", held.body())
+    out
+  }
+
+  /** Committed versions of a collection's event table. */
+  private def commits(warehouse: String, coll: String): Int =
+    Option(new java.io.File(s"$warehouse/demo/$coll/_manifests").listFiles())
+      .getOrElse(Array.empty).count(_.getName.startsWith("commit-v"))
+
+  /** A `/event/batch` body of events `ids` into `coll`. */
+  private def batchOf(coll: String, ids: Range, extra: String = ""): String =
+    ids.map(i =>
+      s"""{"collection": "$coll", "properties": {"_user": "u${i % 5}", "_time": "2026-01-15 10:00:00.000", "kind": "k${i % 3}", "amount": $i, "id": $i$extra}}""")
+      .mkString("""{"api": {"api_key": "k"}, "events": [""", ",", "]}")
+
+  test("group commit: /event/batch requests queued behind a running " +
+    "ingest share commits, each gets its own count, every row stores once, " +
+    "and the view equals a recount") {
+    val registry = SchemaRegistry.inMemory()
+    val warehouse = graft.TempDirs.scratch("graft-group").toString
+    val gw = new HttpGateway(spark, registry, warehouse, "demo")
+    val port = gw.start()
+    try {
+      assert(post(port, "/event/batch", batchOf("grp", 0 until 3)).statusCode() == 200)
+      assert(post(port, "/materialized-view/create",
+        """{"name": "by_kind", "collection": "grp", "group": ["kind"],
+          |"values": ["amount"], "distinct": ["_user"]}""".stripMargin)
+        .statusCode() == 200)
+      val before = commits(warehouse, "grp")
+      val sizes = Seq(2, 5, 7, 3, 11, 4)
+      val ranges = sizes.scanLeft(3)(_ + _).sliding(2).map(w => w(0) until w(1)).toSeq
+      val rs = behindBulk(gw, port,
+        ranges.map(r => () => postAsync(port, "/event/batch", batchOf("grp", r))))
+      rs.zip(sizes).foreach { case (r, n) =>
+        assert(r.statusCode() == 200 && r.body() == s"""{"stored":$n}""", r.body())
+      }
+      val added = commits(warehouse, "grp") - before
+      assert(added == 1, s"$added commits for ${sizes.size} queued requests")
+      val total = 3 + sizes.sum
+      val q = post(port, "/query/execute",
+        """{"query": "SELECT count(*) AS n, count(DISTINCT id) AS d, sum(id) AS s FROM grp"}""")
+      assert(q.body() == s"""[{"n":$total,"d":$total,"s":${total * (total - 1) / 2}.0}]""",
+        q.body())
+      val view = get(port, "/materialized-view/get?name=by_kind")
+      assert(view.statusCode() == 200 && view.body().contains("\"n_rows\":"), view.body())
+      assert(post(port, "/materialized-view/refresh", """{"name": "by_kind"}""")
+        .statusCode() == 200)
+      assert(get(port, "/materialized-view/get?name=by_kind").body() == view.body())
+    } finally gw.stop()
+  }
+
+  test("group commit: a spider member gets its 403 and stores nothing, a " +
+    "shape-failed member keeps its 409 indexes, the other members store") {
+    val registry = SchemaRegistry.inMemory()
+    val warehouse = graft.TempDirs.scratch("graft-group").toString
+    val gw = new HttpGateway(spark, registry, warehouse, "demo")
+    val port = gw.start()
+    try {
+      assert(post(port, "/event/batch", batchOf("mix", 0 until 2)).statusCode() == 200)
+      val before = commits(warehouse, "mix")
+      val bot = "Mozilla/5.0 (compatible; Googlebot/2.1; +http://www.google.com/bot.html)"
+      val spiderBody =
+        """{"api": {"api_key": "k"}, "events": [
+          |{"collection": "mix", "properties": {"_user": "bot", "id": 100, "amount": "junk", "_user_agent": true}},
+          |{"collection": "mix", "properties": {"_user": "bot", "id": 101, "_user_agent": true}}
+          |]}""".stripMargin
+      val shapeBody =
+        """{"api": {"api_key": "k"}, "events": [
+          |{"collection": "mix", "properties": {"_user": "s", "id": 200}},
+          |{"collection": 5, "properties": {"id": 201}},
+          |{"collection": "mix", "properties": {"_user": "s", "id": 202}},
+          |{"collection": "mix"}
+          |]}""".stripMargin
+      val rs = behindBulk(gw, port, Seq(
+        () => postAsync(port, "/event/batch", batchOf("mix", 10 until 14)),
+        () => postAsync(port, "/event/batch", spiderBody, "User-Agent" -> bot),
+        () => postAsync(port, "/event/batch", shapeBody),
+        () => postAsync(port, "/event/batch", batchOf("mix", 20 until 23,
+          extra = """, "note": "x"""") .replace("\"amount\": 21,", "\"amount\": \"bad\","))))
+      assert(rs.map(_.statusCode()) == Seq(200, 403, 409, 200),
+        rs.map(r => s"${r.statusCode()} ${r.body()}"))
+      assert(rs(0).body() == """{"stored":4}""" && rs(3).body() == """{"stored":3}""")
+      assert(rs(1).body().contains("Spiders are not allowed"), rs(1).body())
+      assert(rs(2).body() == "[1,3]", rs(2).body())
+      val added = commits(warehouse, "mix") - before
+      assert(added == 1, s"$added commits for 3 storing members")
+      val ids = post(port, "/query/execute",
+        """{"query": "SELECT CAST(id AS INT) AS id FROM mix ORDER BY id"}""").body()
+      assert(ids == (Seq(0, 1, 10, 11, 12, 13, 20, 21, 22, 200, 202)
+        .map(i => s"""{"id":$i}""").mkString("[", ",", "]")), ids)
+      // the stored member's dead letter lands; the spider's never does
+      val dead = spark.read.parquet(s"$warehouse/demo/invalid_schema").collect()
+      assert(dead.map(_.getAs[String]("_user")).toSeq == Seq("u1"),
+        dead.toSeq.toString)
+    } finally gw.stop()
+  }
+
+  test("group commit is serial-equivalent: the same requests grouped and " +
+    "one by one give the same registry, stored rows and dead letters") {
+    val cookie = "Cookie" -> "_anonymous_user=anon-1"
+    val requests: Seq[(String, Seq[(String, String)])] = Seq(
+      // no _user: the user-id mapper's `_user` STRING comes first …
+      """{"collection": "eq", "properties": {"_time": "2026-01-15 10:00:00.000", "x": "abc", "n": 1}}""" -> Seq(cookie),
+      // … so this numeric _user coerces to it; `x` is STRING by now
+      """{"collection": "eq", "properties": {"_user": 7, "_time": "2026-01-15 10:01:00.000", "x": 5, "y": 1.5}}""" -> Nil,
+      """{"collection": "eq", "properties": {"_user": "u3", "_time": "2026-01-15 10:02:00.000", "y": "junk", "z": true}}""" -> Nil,
+      """{"collection": "other", "properties": {"_user": 9, "_time": "2026-01-15 10:03:00.000", "x": 2.5}}""" -> Nil)
+      .map { case (e, h) => (s"""{"api": {"api_key": "k"}, "events": [$e]}""", h) }
+    val fixedNow = 1_767_225_600_000L
+    def run(grouped: Boolean) = {
+      val registry = SchemaRegistry.inMemory()
+      val warehouse = graft.TempDirs.scratch("graft-serial").toString
+      val gw = new HttpGateway(spark, registry, warehouse, "demo", now = () => fixedNow)
+      val port = gw.start()
+      try {
+        val send = requests.map { case (b, h) => () => postAsync(port, "/event/batch", b, h: _*) }
+        val rs =
+          if (grouped) {
+            val before = commits(warehouse, "eq")
+            val rs = behindBulk(gw, port, send)
+            assert(commits(warehouse, "eq") - before == 1, "the requests did not group")
+            rs
+          } else {
+            assert(post(port, "/event/bulk", holdBody).statusCode() == 200)
+            send.map(_().get(180, java.util.concurrent.TimeUnit.SECONDS))
+          }
+        val rows = Seq("eq", "other").map { c =>
+          val df = EventStore.read(spark, registry, warehouse, "demo", c)
+          c -> df.select(df.columns.sorted.map(df.col).toIndexedSeq: _*)
+            .collect().map(_.toString).sorted.toSeq
+        }
+        val dead = spark.read.parquet(s"$warehouse/demo/invalid_schema")
+          .collect().map(_.toString).sorted.toSeq
+        (rs.map(r => (r.statusCode(), r.body())),
+          Seq("eq", "other").map(c => registry.schema("demo", c)),
+          registry.config("demo", "USER_TYPE"), rows, dead)
+      } finally gw.stop()
+    }
+    val serial = run(grouped = false)
+    val grouped = run(grouped = true)
+    assert(grouped._1 == serial._1)
+    assert(grouped._2 == serial._2, s"registry:\n${grouped._2}\n${serial._2}")
+    assert(grouped._3 == serial._3)
+    assert(grouped._4 == serial._4, s"rows:\n${grouped._4}\n${serial._4}")
+    assert(grouped._5 == serial._5 && serial._5.nonEmpty,
+      s"dead letters:\n${grouped._5}\n${serial._5}")
+    // the cross-request conflict resolved the serial way
+    assert(serial._2.head.get.exists(f => f.name == "x" &&
+      f.tpe == graft.core.FieldType.STRING), serial._2.head.toString)
+  }
+
+  test("group commit: a stored JS mapper is invoked per request — no " +
+    "invocation mixes two requests' events, and the member column is hidden") {
+    val registry = SchemaRegistry.inMemory()
+    val warehouse = graft.TempDirs.scratch("graft-group").toString
+    val gw = new HttpGateway(spark, registry, warehouse, "demo")
+    val port = gw.start()
+    try {
+      val script = "function mapper(events, params, sourceIp, headers, sql, config) { " +
+        "var ev = events.events(); var ids = ''; var hidden = 'hidden'; " +
+        "while (ev.hasNext()) { var e = ev.next(); ids = ids + e.get('id') + ' '; " +
+        "if (e.get('_Member') != null) { hidden = 'visible'; } } " +
+        "logger.info(hidden + ':' + ids); }"
+      assert(post(port, "/custom-event-mapper/create",
+        s"""{"name": "ids", "collection": "js", "script": "$script"}""")
+        .statusCode() == 200)
+      assert(post(port, "/event/batch", batchOf("js", 0 until 1)).statusCode() == 200)
+      val ranges = Seq(100 until 103, 200 until 204, 300 until 302)
+      val rs = behindBulk(gw, port,
+        ranges.map(r => () => postAsync(port, "/event/batch", batchOf("js", r))))
+      assert(rs.forall(_.statusCode() == 200), rs.map(_.body()))
+      val logs = post(port, "/custom-event-mapper/get_logs", """{"name": "ids"}""").body()
+      val messages = "\"message\":\"([^\"]*)\"".r.findAllMatchIn(logs).map(_.group(1)).toSeq
+      assert(messages.nonEmpty && messages.forall(_.startsWith("hidden:")), logs)
+      val invocations = messages.map(_.stripPrefix("hidden:").trim.split(" ").toSeq
+        .map(_.toDouble.toInt / 100))
+      // each invocation's ids come from one request (ids / 100 = request)
+      assert(invocations.forall(_.distinct.size == 1), invocations)
+      assert(invocations.flatten.sorted == (0 +: ranges.flatten.map(_ / 100)).sorted,
+        invocations)
     } finally gw.stop()
   }
 }
